@@ -24,8 +24,12 @@ shuffle-conscious:
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from openseize_spark.session import small_intermediate_coalesce
 
 
 def normalize_text(col):
@@ -33,94 +37,35 @@ def normalize_text(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-# Refcounts for caches whose lifetime is tied to result DataFrames:
-# semanticHash(analyzed plan) -> [live-result count, Java DataFrame].
-# Keyed on the canonicalized-plan hash because that is CacheManager's
-# own equality unit — two persists of semantically equal plans share
-# ONE cache entry, so they must share one refcount.
-_CACHE_REFS: dict[int, list] = {}
+@contextmanager
+def _stationary(df: DataFrame, *keys: str):
+    """Yield ``df`` hash-partitioned on ``keys`` and cached, for an
+    iterative loop that joins it every round, inside
+    ``small_intermediate_coalesce``.  The cache is released when the
+    block exits, on error paths too, so the loop must materialize its
+    result (an action or an eager checkpoint) inside the block.
 
-
-def release_cache_with(result: DataFrame, cached: DataFrame) -> DataFrame:
-    """Tie ``cached``'s cache lifetime to the returned ``result``,
-    refcounted across results that share the same cache entry.
-
-    The candidate-verify operators persist their ``pairs`` input because
-    it feeds several consumers INSIDE the lazily-returned plan, so a
-    try/finally unpersist before return would release the cache before
-    it ever materializes.  The cache therefore has to outlive the call —
-    but it must not outlive its USE: a long-lived driver session running
-    many verify calls would otherwise accumulate candidate tables in the
-    CacheManager forever (the leak class fixed in sampling.py /
-    similarity.py, where in-function actions allow eager unpersist).
-
-    Mechanism: at call time the cache's refcount — keyed by the
-    ANALYZED PLAN's ``semanticHash``, CacheManager's own equality unit —
-    is incremented; a ``weakref.finalize`` on the result decrements it,
-    and the unpersist fires only at zero.  Two verify results built
-    over the same pairs input (or over semantically equal plans, which
-    Spark backs with one cache entry) therefore keep the cache alive
-    until the LAST of them is dropped — dropping the first no longer
-    starves the survivor, the failure mode of the round-8
-    finalizer-per-result version.  The callback captures only the hash
-    key (never the Python DataFrames, which would keep ``result``
-    alive) and guards against the JVM being gone at interpreter
-    shutdown.
-
-    Composition nuance: a consumer that folds the result into a larger
-    LAZY plan and drops the intermediate at return would release the
-    cache before that outer plan executes, recomputing the candidate
-    subtree per in-plan consumer (bounded, value-identical — but the
-    cost the persist exists to avoid).  Consumers either MATERIALIZE
-    in-call while the intermediate is alive (connected_components /
-    pagerank run actions per round; triangle_count eagerly
-    localCheckpoints its edge list) or keep the intermediate alive for
-    the outer result's lifetime with ``tie_lifetime``.  A caller that
-    re-executes a verify result many times keeps the cache by simply
-    holding the reference — the lifetime IS the reference's.
+    Cached rather than checkpointed because a checkpoint hides the hash
+    partitioning from the planner, so each round would re-shuffle the
+    edges; the cached repartition stays visible and only the per-round
+    state moves.
     """
-    import weakref
-
-    key = cached._jdf.queryExecution().analyzed().semanticHash()
-    ent = _CACHE_REFS.setdefault(key, [0, cached._jdf])
-    ent[0] += 1
-
-    def _release(key=key):
-        ent = _CACHE_REFS.get(key)
-        if ent is None:
-            return
-        ent[0] -= 1
-        if ent[0] > 0:
-            return
-        _CACHE_REFS.pop(key, None)
+    spark = df.sparkSession
+    with small_intermediate_coalesce(spark):
+        cached = df.repartition(
+            spark.sparkContext.defaultParallelism, *keys
+        ).persist()
         try:
-            ent[1].unpersist(False)
-        except Exception:
-            pass  # gateway already shut down
-
-    weakref.finalize(result, _release)
-    return result
+            yield cached
+        finally:
+            cached.unpersist(blocking=False)
 
 
-# internal callers predate the public name
-_release_cache_with = release_cache_with
-
-
-def tie_lifetime(outer: DataFrame, *inner: DataFrame) -> DataFrame:
-    """Keep ``inner`` DataFrames referenced for as long as ``outer``
-    lives.
-
-    For builders that compose a verify result (whose internal candidate
-    cache is scoped to that result's lifetime) into a larger LAZY plan
-    and would otherwise drop the intermediate at return: anchoring the
-    intermediates on the returned DataFrame keeps their caches alive
-    until the composed result itself is dropped, so the outer execution
-    still hits them.  Pure driver-side bookkeeping — no plan change.
-    """
-    outer._os_lifetime_refs = getattr(outer, "_os_lifetime_refs", ()) + tuple(
-        inner
-    )
-    return outer
+def _undirected(edges: DataFrame, a_col: str, b_col: str) -> DataFrame:
+    """Both orientations of every (a, b) pair as (x, y) rows."""
+    return edges.select(
+        F.col(a_col).alias("x"), F.col(b_col).alias("y")
+    ).union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
 
 
 def decontaminate(
@@ -740,15 +685,9 @@ def triangle_count(edges: DataFrame) -> DataFrame:
 
     Returns (id, n_triangles) for nodes in at least one triangle.
     """
-    # Three consumers of the edge list; checkpoint so a possibly
-    # expensive upstream pair-generation plan executes once.  The
-    # checkpoint is EAGER (matching connected_components / pagerank):
-    # when the edges come from a verify operator whose candidate cache
-    # is tied to the verify result's lifetime (_release_cache_with),
-    # building the checkpoint in-call — while the caller still holds
-    # that result — is what lets the edge materialization hit the
-    # cache; a lazy checkpoint would first run after the intermediate
-    # is dropped and recompute the candidate pipeline per consumer.
+    # Three consumers of the edge list; checkpoint (eagerly, matching
+    # connected_components / pagerank) so a possibly expensive upstream
+    # pair-generation plan executes once.
     edges = edges.localCheckpoint(eager=True)
     e1 = edges.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = edges.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -1087,18 +1026,8 @@ def personalized_pagerank(
 
     Returns (id, degree, ppr) for nodes with nonzero rank mass.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     S = int(scale)
-    und = edges.select(
-        F.col(a_col).alias("x"), F.col(b_col).alias("y")
-    ).union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(edges.sparkSession):
-        # persist, NOT localCheckpoint (round-14, cf. pagerank): keeps
-        # the repartition visible so the per-round contribution join
-        # leaves the edge list stationary.  Released in-call below.
-        und = und.repartition(n_part, "x").persist()
+    with _stationary(_undirected(edges, a_col, b_col), "x") as und:
         deg = und.groupBy("x").agg(
             F.count("*").alias("deg")
         ).localCheckpoint(eager=True)
@@ -1156,7 +1085,6 @@ def personalized_pagerank(
                 .filter(F.col("u") > 0)
                 .localCheckpoint(eager=True)
             )
-        und.unpersist(blocking=False)
     return ranks.select(
         F.col("x").alias("id"),
         F.col("deg").cast("bigint").alias("degree"),
@@ -2401,22 +2329,13 @@ def label_propagation(
 
     Returns (id, label) after ``rounds`` rounds.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     und = (
-        edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-        .union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
+        _undirected(edges, a_col, b_col)
         .filter(F.col("x") != F.col("y"))
         .distinct()
     )
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(edges.sparkSession):
-        # persist keyed on the JOIN key y — the old checkpoint both
-        # erased the partitioning from the planner AND keyed it on x
-        # while every round joins on y, so each of the `rounds` vote
-        # joins re-shuffled the full edge list (round-14).  Released
-        # in-call below.
-        und = und.repartition(n_part, "y").persist()
+    # keyed on the JOIN key y: every round joins on y
+    with _stationary(und, "y") as und:
         labels = (
             und.select(F.col("x").alias("id"))
             .distinct()
@@ -2446,7 +2365,6 @@ def label_propagation(
                 .select("id", (-F.col("_m._nl")).alias("label"))
                 .localCheckpoint(eager=True)
             )
-        und.unpersist(blocking=False)
     return labels
 
 
@@ -2675,33 +2593,14 @@ def pagerank(
     Spark's ``div`` — so no broadcast join rides any round.
     Returns (id, degree, pagerank) with pagerank = units / scale.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     S = int(scale)
-    und = edges.select(
-        F.col(a_col).alias("x"), F.col(b_col).alias("y")
-    ).union(edges.select(F.col(b_col).alias("x"), F.col(a_col).alias("y")))
-    # the per-round intermediates are rank tables of |V| short rows —
-    # coalesce them to advisory size (1-2 tasks) instead of 32-64
-    # near-empty tasks per round; the FINAL checkpoint below is the
-    # eager action that materializes every round inside this scope
-    # (AQE reads the conf at action time)
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(edges.sparkSession):
-        # cut the lineage once: every iteration re-references the edge
-        # list and degree table, and without this the (possibly
-        # expensive) upstream pair-generation plan is re-executed per
-        # reference and the composed plan grows superlinearly — same
-        # discipline as connected_components.  persist, NOT
-        # localCheckpoint (round-14 fix): a checkpoint ERASES the hash
-        # partitioning from the planner (the random_walks gotcha), so
-        # every iteration's contribution join would re-shuffle the full
-        # edge list; the persisted repartition node stays visible and
-        # only the |V|-row rank table moves per round — one |E| shuffle
-        # total.  The cache is released in-call after the final
-        # checkpoint materializes every round, so no CacheManager entry
-        # outlives the call and bench reps can never reuse it.
-        und = und.repartition(n_part, "x").persist()
+    # the per-round intermediates are rank tables of |V| short rows,
+    # coalesced to advisory size inside the scope; the FINAL checkpoint
+    # below is the eager action that materializes every round in it
+    # (AQE reads the conf at action time).  The cached edge list also
+    # cuts the lineage once, so the upstream pair-generation plan is
+    # not re-executed per round.
+    with _stationary(_undirected(edges, a_col, b_col), "x") as und:
         deg = und.groupBy("x").agg(F.count("*").alias("deg")).localCheckpoint(
             eager=True
         )
@@ -2732,7 +2631,6 @@ def pagerank(
                 ),
             )
         ranks = ranks.localCheckpoint(eager=True)
-        und.unpersist(blocking=False)
     return ranks.select(
         F.col("x").alias("id"),
         F.col("deg").cast("bigint").alias("degree"),
@@ -2826,22 +2724,12 @@ def hits(
     Returns (node_type 'hub'|'auth', id, score) with score =
     units / scale.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     S = int(scale)
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        # store the edge list hash-partitioned on each round's join key
-        # (src for the auth step, dst for the hub step) so only |V|-row
-        # score tables move per round.  persist, NOT localCheckpoint
-        # (round-14, cf. pagerank): the checkpoint erased the
-        # partitioning and every half-round re-shuffled the edges.
-        # Released in-call below.
-        e_src = edges.select(src_col, dst_col).repartition(
-            n_part, src_col
-        ).persist()
-        e_dst = e_src.repartition(n_part, dst_col).persist()
+    # the edge list stored hash-partitioned on each round's join key:
+    # src for the auth step, dst for the hub step
+    with _stationary(
+        edges.select(src_col, dst_col), src_col
+    ) as e_src, _stationary(e_src, dst_col) as e_dst:
         hubs = e_src.select(F.col(src_col).alias("id")).distinct().select(
             "id", F.lit(S).cast("bigint").alias("u")
         ).localCheckpoint(eager=True)
@@ -2883,8 +2771,6 @@ def hits(
                 )
                 .localCheckpoint(eager=True)
             )
-        e_src.unpersist(blocking=False)
-        e_dst.unpersist(blocking=False)
     out = hubs.select(
         F.lit("hub").alias("node_type"),
         F.col("id").cast("bigint").alias("id"),
@@ -2979,24 +2865,7 @@ def bfs_distances(
     Returns (id, dist) for every node within ``max_hops`` of a seed
     (seeds at dist 0); unreached nodes are absent.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            # persist, NOT localCheckpoint (round-14, cf. pagerank):
-            # keeps the repartition visible so each hop's frontier join
-            # leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "x")
-            .persist()
-        )
+    with _stationary(_undirected(edges, a_col, b_col), "x") as und:
         dist = (
             seeds.select(F.col(seed_col).alias("id"))
             .distinct()
@@ -3019,7 +2888,6 @@ def bfs_distances(
             )
             dist = dist.unionByName(nxt).localCheckpoint(eager=True)
             frontier = dist.filter(F.col("dist") == hop)
-        und.unpersist(blocking=False)
     return dist
 
 
@@ -3094,23 +2962,13 @@ def sssp_bounded(
     a silent divergence (r11 ADVICE).  A bounded scalar ``min(w)``
     check rejects such inputs up front.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        e = (
-            edges.select(
-                F.col(u_col).alias("u"),
-                F.col(v_col).alias("v"),
-                F.col(w_col).cast("bigint").alias("w"),
-            )
-            # persist, NOT localCheckpoint (round-14, cf. pagerank):
-            # keeps the repartition visible so each relaxation round's
-            # join leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "u")
-            .persist()
-        )
+    e = edges.select(
+        F.col(u_col).alias("u"),
+        F.col(v_col).alias("v"),
+        F.col(w_col).cast("bigint").alias("w"),
+    )
+    with _stationary(e, "u") as e:
         min_w = e.agg(F.min("w").alias("m")).collect()[0]["m"]
         if min_w is not None and min_w < 1:
             raise ValueError(
@@ -3156,7 +3014,6 @@ def sssp_bounded(
             dist = new
             if frontier.count() == 0:
                 break
-        e.unpersist(blocking=False)
         return dist
 
 
@@ -3210,28 +3067,11 @@ def sp_counting(
     Returns (id, dist, sigma) for every node within ``max_hops``
     (source at dist 0 with sigma 1).
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            .distinct()
-            # persist, NOT localCheckpoint (round-14): the checkpoint
-            # erased the repartition from the planner, so every level's
-            # frontier join re-shuffled the full edge list; the cached
-            # repartition node keeps und stationary and only the
-            # frontier moves per level.  Released in-call below.
-            .repartition(n_part, "x")
-            .persist()
-        )
+    with _stationary(
+        _undirected(edges, a_col, b_col).distinct(), "x"
+    ) as und:
         done = spark.createDataFrame(
             [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
         ).select(
@@ -3249,8 +3089,8 @@ def sp_counting(
         # and the per-level eager materialization both disappear.  One
         # eager checkpoint at the end executes the whole BFS as a
         # single multi-stage job (2*max_hops+1 -> 1 actions), and must
-        # run BEFORE the edge cache releases or the returned plan would
-        # recompute und from `edges` per level.
+        # run inside the `with` or the returned plan would recompute
+        # und from `edges` per level.
         for hop in range(1, max_hops + 1):
             nxt = (
                 und.join(
@@ -3269,9 +3109,7 @@ def sp_counting(
             )
             done = done.unionByName(nxt)
             frontier = nxt
-        done = done.localCheckpoint(eager=True)
-        und.unpersist(blocking=False)
-        return done
+        return done.localCheckpoint(eager=True)
 
 
 def sp_counting_oracle_sql(
@@ -3353,26 +3191,11 @@ def betweenness_contrib(
 
     Returns (id, dist, delta_units) for every reached node.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            .distinct()
-            # persist, NOT localCheckpoint (round-14, cf. sp_counting):
-            # keeps the repartition visible so the per-level frontier
-            # join leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "x")
-            .persist()
-        )
+    with _stationary(
+        _undirected(edges, a_col, b_col).distinct(), "x"
+    ) as und:
         done = spark.createDataFrame(
             [(int(source), 0, 1)], "id bigint, dist int, sigma bigint"
         ).select(
@@ -3404,7 +3227,7 @@ def betweenness_contrib(
             done = done.unionByName(nxt)
             frontier = nxt
         lmax = done.agg(F.max("dist").alias("m")).collect()[0]["m"]
-        dag = (
+        succ = (
             und.join(
                 done.select(
                     F.col("id").alias("x"),
@@ -3429,77 +3252,72 @@ def betweenness_contrib(
                 "sigma_v",
                 "sigma_w",
             )
-            # persist (round-14): the v-hash partitioning stays visible,
-            # so each backward round — a broadcastable per-level join on
-            # w followed by groupBy(v) — aggregates in place with no
-            # exchange of the DAG.  Released in-call below.
-            .repartition(n_part, "v")
-            .persist()
         )
-        delta = (
-            done.filter(F.col("dist") == lmax)
-            .select(
-                "id", "dist", F.lit(0).cast(dec).alias("delta_units")
-            )
-            .localCheckpoint(eager=False)
-        )
-        level_delta = delta
-        # the backward sweep is a FIXED linear chain once lmax is known
-        # (level h depends only on level h+1), so the rounds stay lazy
-        # (each level's checkpoint persists on first compute, serving
-        # both its union arm and the next round) and the single eager
-        # checkpoint after the loop executes the whole sweep in one
-        # job — it must materialize before und/dag unpersist or the
-        # returned plan would recompute them per level (round 15)
-        for h in range(int(lmax) - 1, -1, -1):
-            contrib = (
-                dag.filter(F.col("dist_v") == h)
-                .join(
-                    level_delta.select(
-                        F.col("id").alias("w"),
-                        F.col("delta_units").alias("dw"),
-                    ),
-                    on="w",
-                )
+        # keyed on v, so each backward round — a broadcastable
+        # per-level join on w followed by groupBy(v) — aggregates in
+        # place with no exchange of the DAG
+        with _stationary(succ, "v") as dag:
+            delta = (
+                done.filter(F.col("dist") == lmax)
                 .select(
-                    "v",
-                    F.round(
-                        (
-                            F.col("sigma_v").cast("double")
-                            / F.col("sigma_w").cast("double")
-                        )
-                        * (
-                            F.lit(float(unit))
-                            + F.col("dw").cast("double")
-                        )
-                    ).cast(dec).alias("cu"),
-                )
-                .groupBy("v")
-                .agg(F.sum("cu").cast(dec).alias("delta_units"))
-            )
-            lvl = (
-                done.filter(F.col("dist") == h)
-                .select("id", "dist")
-                .join(
-                    contrib.withColumnRenamed("v", "id"),
-                    on="id",
-                    how="left",
-                )
-                .select(
-                    "id",
-                    "dist",
-                    F.coalesce(
-                        F.col("delta_units"), F.lit(0).cast(dec)
-                    ).alias("delta_units"),
+                    "id", "dist", F.lit(0).cast(dec).alias("delta_units")
                 )
                 .localCheckpoint(eager=False)
             )
-            delta = delta.unionByName(lvl)
-            level_delta = lvl
-        delta = delta.localCheckpoint(eager=True)
-        und.unpersist(blocking=False)
-        dag.unpersist(blocking=False)
-        return delta
+            level_delta = delta
+            # the backward sweep is a FIXED linear chain once lmax is known
+            # (level h depends only on level h+1), so the rounds stay lazy
+            # (each level's checkpoint persists on first compute, serving
+            # both its union arm and the next round) and the single eager
+            # checkpoint after the loop executes the whole sweep in one
+            # job — it must run inside the `with` blocks or the returned
+            # plan would recompute und and dag per level (round 15)
+            for h in range(int(lmax) - 1, -1, -1):
+                contrib = (
+                    dag.filter(F.col("dist_v") == h)
+                    .join(
+                        level_delta.select(
+                            F.col("id").alias("w"),
+                            F.col("delta_units").alias("dw"),
+                        ),
+                        on="w",
+                    )
+                    .select(
+                        "v",
+                        F.round(
+                            (
+                                F.col("sigma_v").cast("double")
+                                / F.col("sigma_w").cast("double")
+                            )
+                            * (
+                                F.lit(float(unit))
+                                + F.col("dw").cast("double")
+                            )
+                        ).cast(dec).alias("cu"),
+                    )
+                    .groupBy("v")
+                    .agg(F.sum("cu").cast(dec).alias("delta_units"))
+                )
+                lvl = (
+                    done.filter(F.col("dist") == h)
+                    .select("id", "dist")
+                    .join(
+                        contrib.withColumnRenamed("v", "id"),
+                        on="id",
+                        how="left",
+                    )
+                    .select(
+                        "id",
+                        "dist",
+                        F.coalesce(
+                            F.col("delta_units"), F.lit(0).cast(dec)
+                        ).alias("delta_units"),
+                    )
+                    .localCheckpoint(eager=False)
+                )
+                delta = delta.unionByName(lvl)
+                level_delta = lvl
+            return delta.localCheckpoint(eager=True)
 
 
 def betweenness_contrib_oracle_sql(
@@ -3614,37 +3432,15 @@ def random_walks(
 
     Returns (seed, step, node): step 0 is the seed itself.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     M = 2147483647
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        und = (
-            edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-            .union(
-                edges.select(
-                    F.col(b_col).alias("x"), F.col(a_col).alias("y")
-                )
-            )
-            .distinct()
-        )
-        w_adj = Window.partitionBy("x").orderBy("y")
-        # persist (not checkpoint) so the x-hash partitioning stays
-        # visible to the planner: each step's neighbor join then
-        # shuffles only the walk FRONTIER, never the adjacency —
-        # measured 117s -> much less at sf1 where |E| >> |frontier|.
-        # All steps materialize eagerly below, so the unpersist before
-        # return cannot starve a lazy consumer.
-        adj = (
-            und.select(
-                "x",
-                "y",
-                (F.row_number().over(w_adj) - 1).alias("rank"),
-            )
-            .repartition(n_part, "x")
-            .persist()
-        )
+    und = _undirected(edges, a_col, b_col).distinct()
+    w_adj = Window.partitionBy("x").orderBy("y")
+    ranked = und.select(
+        "x", "y", (F.row_number().over(w_adj) - 1).alias("rank")
+    )
+    # each step's neighbor join shuffles only the walk FRONTIER, never
+    # the adjacency (117 s -> 40 s at sf1, where |E| >> |frontier|)
+    with _stationary(ranked, "x") as adj:
         degs = adj.groupBy("x").agg(
             F.count("*").cast("bigint").alias("deg")
         ).localCheckpoint(eager=True)
@@ -3686,7 +3482,6 @@ def random_walks(
                 )
             )
             walk = stepped
-        adj.unpersist(False)
         return out
 
 
@@ -3874,37 +3669,19 @@ def sppmi_embed(
 
     Returns (node, vu) — the embedding in ``unit`` units.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
-    spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
     dec = "decimal(38,0)"
-    with small_intermediate_coalesce(spark):
-        coo = skipgram_cooc(
-            edges, length=length, window=window, a_col=a_col, b_col=b_col
-        )
-        m = (
-            coo.select(
-                "u",
-                "v",
-                F.round(
-                    F.greatest(F.col("pmi"), F.lit(0.0))
-                    * F.lit(float(unit))
-                )
-                .cast("bigint")
-                .alias("su"),
-            )
-            .filter(F.col("su") > 0)
-            .repartition(n_part, "v")
-            # persist, NOT localCheckpoint: checkpoint erases the hash
-            # partitioning from the planner and the loop would
-            # re-shuffle the whole matrix every round; persist keeps
-            # the repartition node visible so only the N-row iterate
-            # shuffles per round (the random_walks precedent).
-            # Unpersisted before return once every round has
-            # materialized eagerly.
-            .persist()
-        )
+    coo = skipgram_cooc(
+        edges, length=length, window=window, a_col=a_col, b_col=b_col
+    )
+    sppmi = coo.select(
+        "u",
+        "v",
+        F.round(F.greatest(F.col("pmi"), F.lit(0.0)) * F.lit(float(unit)))
+        .cast("bigint")
+        .alias("su"),
+    ).filter(F.col("su") > 0)
+    # only the N-row iterate shuffles per round, never the matrix
+    with _stationary(sppmi, "v") as m:
         state = (
             m.select(F.col("u").alias("node"))
             .distinct()
@@ -3952,7 +3729,6 @@ def sppmi_embed(
                     f"END"
                 ).alias("vu"),
             )
-        m.unpersist()
         return state
 
 
@@ -4041,23 +3817,13 @@ def temporal_reach(
     Returns (node, arrival) for reachable nodes; the source reports
     arrival 0.
     """
-    from openseize_spark.session import small_intermediate_coalesce
-
     spark = edges.sparkSession
-    n_part = spark.sparkContext.defaultParallelism
-    with small_intermediate_coalesce(spark):
-        e = (
-            edges.select(
-                F.col(u_col).alias("u"),
-                F.col(v_col).alias("v"),
-                F.col(t_col).cast("bigint").alias("t"),
-            )
-            # persist, NOT localCheckpoint (round-14, cf. pagerank):
-            # keeps the repartition visible so each relaxation round's
-            # join leaves the edge list stationary.  Released in-call.
-            .repartition(n_part, "u")
-            .persist()
-        )
+    e = edges.select(
+        F.col(u_col).alias("u"),
+        F.col(v_col).alias("v"),
+        F.col(t_col).cast("bigint").alias("t"),
+    )
+    with _stationary(e, "u") as e:
         arr = spark.createDataFrame(
             [(int(source), 0)], "node bigint, arrival bigint"
         ).localCheckpoint(eager=True)
@@ -4098,7 +3864,6 @@ def temporal_reach(
             ).select("node", "arrival")
             arr = merged.select("node", "arrival")
             if frontier.count() == 0:
-                e.unpersist(blocking=False)
                 break
         else:
             raise RuntimeError(
@@ -4789,52 +4554,38 @@ def dag_layers(edges: DataFrame, rounds: int = 8) -> DataFrame:
     makes the result a deterministic spec independent of convergence
     (the stationary_markov fixed-rounds discipline).  Each round is one
     equi-join + one max-aggregate; the edge set is the only large input
-    and THIS function owns its materialization (repartition + persist
-    below) — callers should pass the raw lazy edge plan, not a
-    checkpoint (a caller-side localCheckpoint wastes a job and erases
-    the partitioning re-established here).  Returns the level
-    histogram (lv, n_docs).
-
-    The edge list is STATIONARY across all ``rounds`` joins, so it is
-    repartitioned on the join key and persisted (round-14: the
-    pagerank/temporal_reach discipline — a caller's localCheckpoint
-    ERASES partitioning from the planner, so every round was
-    re-shuffling the full edge list; the persisted repartition node
-    stays visible and only the |V|-row level table moves per round).
-    The rounds are lazy (zero in-call jobs), so the cache is released
-    with the returned result, not in-call.  A consumer that folds the
-    result into a larger lazy plan and drops the intermediate at
-    return should anchor it with ``tie_lifetime`` (see
-    release_cache_with's composition nuance), or the edge cache can
-    release before the outer action runs and the rounds recompute the
-    edge plan per join.
+    and THIS function owns its materialization — callers should pass
+    the raw lazy edge plan, not a checkpoint (a caller-side
+    localCheckpoint wastes a job and hides the partitioning the
+    rounds join on).  Returns the level histogram (lv, n_docs),
+    checkpointed eagerly so the rounds run while the edge cache lives.
     """
-    n_part = edges.sparkSession.sparkContext.defaultParallelism
-    edges = edges.repartition(n_part, "a").persist()
-    nodes = (
-        edges.select(F.col("a").alias("v"))
-        .unionByName(edges.select(F.col("b").alias("v")))
-        .distinct()
-    )
-    lv = nodes.select("v", F.lit(0).cast("bigint").alias("lv"))
-    for _ in range(rounds):
-        # lv feeds BOTH the carry arm and the bump join — checkpoint
-        # each round or the plan doubles per round (2^rounds exchanges;
-        # the pca_power_iteration lesson)
-        lv = lv.localCheckpoint(eager=False)
-        bumped = (
-            edges.join(lv, edges.a == lv.v)
-            .select(F.col("b").alias("v"), (F.col("lv") + 1).alias("lv"))
+    with _stationary(edges, "a") as edges:
+        nodes = (
+            edges.select(F.col("a").alias("v"))
+            .unionByName(edges.select(F.col("b").alias("v")))
+            .distinct()
         )
-        lv = (
-            lv.unionByName(bumped)
-            .groupBy("v")
-            .agg(F.max("lv").alias("lv"))
+        lv = nodes.select("v", F.lit(0).cast("bigint").alias("lv"))
+        for _ in range(rounds):
+            # lv feeds BOTH the carry arm and the bump join — checkpoint
+            # each round or the plan doubles per round (2^rounds
+            # exchanges; the pca_power_iteration lesson)
+            lv = lv.localCheckpoint(eager=False)
+            bumped = (
+                edges.join(lv, edges.a == lv.v)
+                .select(F.col("b").alias("v"), (F.col("lv") + 1).alias("lv"))
+            )
+            lv = (
+                lv.unionByName(bumped)
+                .groupBy("v")
+                .agg(F.max("lv").alias("lv"))
+            )
+        return (
+            lv.groupBy("lv")
+            .agg(F.count("*").cast("bigint").alias("n_docs"))
+            .localCheckpoint(eager=True)
         )
-    result = lv.groupBy("lv").agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
-    return release_cache_with(result, edges)
 
 
 def dag_layers_oracle_sql(

@@ -13,10 +13,11 @@ shuffle-parallel DataFrame op without changing semantics.  Strategy
   whole channel (zero-phase filtfilt *requires* whole-series access for
   the reverse pass, which is why the reference needs its one-chunk-
   lookahead machinery, core/numerical.py:384-411);
-- for channels longer than executor memory, ``sosfilt_chunked`` documents
-  the carried-zi sequential algorithm (exact, reference's own approach) —
-  state carry is exact, so an external driver loop over block boundaries
-  yields identical results (tested in tests/test_iir.py).
+- for channels longer than executor memory, ``sosfilt_blocks`` runs a
+  parallel-in-time state scan over fixed-size blocks, and
+  ``streaming.stateful.streaming_sosfilt`` carries zi across micro-batches
+  (the reference's own carried-state approach; DF2T state carry is
+  exact).
 """
 
 from __future__ import annotations
@@ -369,13 +370,3 @@ def _reverse_time(df, span=None):
         )
     )
 
-
-def sosfilt_chunked_scan(x_chunks, sos):
-    """Reference-exact chunked sosfilt: a generator consuming ndarray
-    chunks and carrying zi (reference: core/numerical.py:301-335) — the
-    longer-than-memory fallback documented in SURVEY §7; used by the
-    streaming stateful variant (streaming/stateful.py)."""
-    z = None
-    for chunk in x_chunks:
-        y, z = kernels.sosfilt(sos, chunk, z)
-        yield y

@@ -1,11 +1,9 @@
 """Print a normalized physical-plan digest for named registry queries.
 
 Purpose: prove a change is PLAN-NEUTRAL — run this tool in two
-checkouts (e.g. pre- and post-merge) and diff the output lines.  The
-round-10 use case is the refcounted cache-release landing: releasing a
-persisted DataFrame after its result is consumed must not change the
-executed plan shape of `pac`, `pac_surrogates`, `er_pipeline`,
-`blocking_yield`, or `cluster_cohesion`.
+checkouts (e.g. pre- and post-change) and diff the output lines.  Use
+it for refactors that must not change a query's physical plan, such
+as moving how an operator caches or checkpoints its intermediates.
 
 Normalization: expression ids (`#123`), `plan_id=N`, `id=#N`, and
 cached-RDD numbers differ run-to-run without changing the plan shape,
